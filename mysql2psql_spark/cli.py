@@ -47,6 +47,7 @@ from mysql2psql_spark.plans.migration import migrate_table, plan_migration
 from mysql2psql_spark.plans.orchestration import PhaseTimer, run_concurrent
 from mysql2psql_spark.sinks import write_reference_csv
 from mysql2psql_spark.sinks import ddl as ddl_gen
+from mysql2psql_spark.sources.parquet import input_bytes, scan_fanout
 
 
 def load_json_lenient(path: str) -> dict[str, Any]:
@@ -82,8 +83,8 @@ def _csv_tables(spark, artifact_dir: str, only: list[str]) -> dict[str, Any]:
     loads are schema-first like the reference's \\copy — and each
     tables/<name>.sql directory holds that table's reference-dialect CSV
     (S8). This closes the lifecycle loop: extract -> dump -> re-ingest
-    runs entirely on engine artifacts."""
-    from mysql2psql_spark import schema_ir as ir
+    runs entirely on engine artifacts. The CSVs hold only the columns
+    the migration kept, so skipped columns stay out of the StructType."""
     from mysql2psql_spark.sources.csv_source import read_reference_csv
 
     with open(os.path.join(artifact_dir, "psql_schema.json")) as f:
@@ -95,7 +96,10 @@ def _csv_tables(spark, artifact_dir: str, only: list[str]) -> dict[str, Any]:
         path = os.path.join(artifact_dir, "tables", f"{table['name']}.sql")
         if not os.path.isdir(path):
             continue
-        frames[key] = read_reference_csv(spark, path, ir.to_struct_type(table))
+        kept = {k: c for k, c in table["columns"].items() if not c.get("_SKIP_")}
+        frames[key] = read_reference_csv(
+            spark, path, ir.to_struct_type({**table, "columns": kept})
+        )
     return frames
 
 
@@ -151,10 +155,30 @@ def migrate_db(
 
     with timer.phase("data"):
         manifest: dict[str, str] = {}
+        keys = [k for k in plan.ir_converted["tables"] if k in frames]
+        # Tables already run side by side (run_concurrent), so only a table
+        # holding at least 1/width of the migration's input bytes leaves
+        # cores idle while it runs alone; spreading the others only adds
+        # exchange work and cold-JVM codegen (sf0.1 CLI, 10 tables, 4 vCPU,
+        # median of 4 interleaved cold runs of the data phase: 7.8 s
+        # unspread, 9.0 s with every table in the byte gate spread, 7.7 s
+        # with only lineitem spread; warm, in one session: 3.5 s unspread,
+        # 2.5 s with only lineitem spread).
+        sizes = {k: input_bytes(frames[k]) for k in keys}
+        total = sum(b for b in sizes.values() if b)
+        width = spark.sparkContext.defaultParallelism
 
         def dump(key: str):
             table = plan.ir_converted["tables"][key]
-            out = migrate_table(frames[key], plan, key, parents=frames)
+            # A single-row-group source scans in one task, and so would
+            # its rules and CSV encode: spread the raw rows BEFORE the
+            # rules (spreading migrate_table's output measured no faster
+            # than one task: the rules then still run serially), then
+            # write one part file per task.
+            src = frames[key]
+            if sizes[key] is not None and sizes[key] * width >= total:
+                src = scan_fanout(spark, src, sizes[key])
+            out = migrate_table(src, plan, key, parents=frames)
             if export_jsonl:
                 # dual-sink: persist the transformed frame so the CSV and
                 # JSONL writes consume ONE computation (without it the
@@ -165,7 +189,7 @@ def migrate_db(
                 out = out.persist()
                 try:
                     path = os.path.join(base, "tables", f"{table['name']}.sql")
-                    manifest[key] = write_reference_csv(out, path, single_file=True)
+                    manifest[key] = write_reference_csv(out, path)
                     # sibling JSONL export of the SAME transformed frame
                     # (sources/jsonl.py documents why a corpus pipeline
                     # wants it next to the \copy CSV)
@@ -176,9 +200,9 @@ def migrate_db(
                     out.unpersist(False)
             else:
                 path = os.path.join(base, "tables", f"{table['name']}.sql")
-                manifest[key] = write_reference_csv(out, path, single_file=True)
+                manifest[key] = write_reference_csv(out, path)
 
-        jobs = [(k, (lambda k=k: dump(k))) for k in plan.ir_converted["tables"] if k in frames]
+        jobs = [(k, (lambda k=k: dump(k))) for k in keys]
         run_concurrent(spark, jobs, max_parallel=threads or 4)
         copy_lines = (
             ddl_gen.load_preamble()

@@ -537,11 +537,11 @@ def langid_profile_artifact(
     import os
 
     from mysql2psql_spark.operators.layout import session_scratch
-    from mysql2psql_spark.sources.parquet import _path_mtime, load_table
+    from mysql2psql_spark.sources.parquet import load_table, path_stat
 
     doc_path = os.path.realpath(f"{sf_dir}/documents.parquet")
     try:
-        mtime = _path_mtime(doc_path)
+        mtime = path_stat(doc_path)[0]
     except OSError:
         mtime = None
     key = (spark.sparkContext.applicationId, doc_path, mtime, k)
@@ -840,11 +840,11 @@ def quality_stats_artifact(
     import os
 
     from mysql2psql_spark.operators.layout import session_scratch
-    from mysql2psql_spark.sources.parquet import _path_mtime, load_table
+    from mysql2psql_spark.sources.parquet import load_table, path_stat
 
     doc_path = os.path.realpath(f"{sf_dir}/documents.parquet")
     try:
-        mtime = _path_mtime(doc_path)
+        mtime = path_stat(doc_path)[0]
     except OSError:
         mtime = None
     key = (spark.sparkContext.applicationId, doc_path, mtime, "quality_stats")

@@ -19,7 +19,7 @@ the IR and the final per-table "physical plan" is a DataFrame transform:
 LIVE source (/root/reference/libs/MysqlParser.py:70-101). The engine is
 read-only toward sources by design; the two idioms the reference actually
 uses compile to transformations:
-  - DELETE ... WHERE fk NOT IN (SELECT id FROM parent)  -> left_semi keep
+  - DELETE ... WHERE fk NOT IN (SELECT id FROM parent)  -> null-safe semi keep
   - UPDATE ... SET ts = ts - INTERVAL n HOUR            -> column shift
 Anything else is surfaced as unsupported, not silently dropped.
 """
@@ -117,13 +117,28 @@ def plan_migration(
 def apply_pre_sql(
     df: DataFrame, specs: list[dict[str, Any]], parents: dict[str, DataFrame]
 ) -> DataFrame:
-    """Apply compiled pre-SQL transformations to an extracted table."""
+    """Apply compiled pre-SQL transformations to an extracted table.
+
+    ``DELETE ... WHERE fk NOT IN (SELECT key FROM parent)`` keeps the
+    rows whose ``fk`` matches a parent key AND the rows whose ``fk`` is
+    NULL: MySQL evaluates ``NULL NOT IN (...)`` to NULL, which deletes
+    nothing. One null-safe semi join against the parent keys plus one
+    NULL row does both in a single hash join, with no job at
+    construction. Two edges differ from MySQL, whose answer depends on
+    the parent's contents: with an EMPTY parent MySQL deletes every
+    row (``x NOT IN ()`` is true, NULL included) while the NULL-FK rows
+    stay here; with a NULL parent key MySQL deletes nothing (an
+    unmatched ``fk`` compares NULL) while unmatched rows go here. A
+    parent key column declared NOT NULL rules out the second."""
     for spec in specs:
         if spec["kind"] == "semi_keep":
-            parent = parents[spec["parent"]].select(spec["parent_key"])
-            df = df.join(
-                parent, df[spec["fk"]] == parent[spec["parent_key"]], "left_semi"
+            pk = spec["parent_key"]
+            parent = parents[spec["parent"]].select(pk)
+            null_key = parent.sparkSession.range(1, numPartitions=1).select(
+                F.lit(None).cast(parent.schema[pk].dataType).alias(pk)
             )
+            keys = parent.union(null_key)
+            df = df.join(keys, df[spec["fk"]].eqNullSafe(keys[pk]), "left_semi")
         elif spec["kind"] == "interval_shift":
             df = df.withColumn(
                 spec["col"], F.col(spec["col"]) - F.expr(f"INTERVAL {spec['hours']} HOURS")

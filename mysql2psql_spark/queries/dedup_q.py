@@ -45,11 +45,11 @@ def _doc_table_parts(spark: SparkSession, sf_dir: str) -> int:
     (scale-adaptive, never a local constant)."""
     import os
 
-    from mysql2psql_spark.sources.parquet import _path_stat
+    from mysql2psql_spark.sources.parquet import path_stat
 
     width = spark.sparkContext.defaultParallelism
     try:
-        _, nbytes = _path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
+        _, nbytes = path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
     except OSError:
         return width
     return int(max(2, min(width, (nbytes + (256 << 10) - 1) // (256 << 10))))

@@ -2652,11 +2652,11 @@ def _bpe_vocab_parts(spark: SparkSession, sf_dir: str) -> int:
     defaultParallelism either way."""
     import os
 
-    from mysql2psql_spark.sources.parquet import _path_stat
+    from mysql2psql_spark.sources.parquet import path_stat
 
     width = spark.sparkContext.defaultParallelism
     try:
-        _, nbytes = _path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
+        _, nbytes = path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
     except OSError:
         return width
     return max(1, min(width, (nbytes + (4 << 20) - 1) // (4 << 20)))

@@ -16,9 +16,16 @@ including the literal 'NULL'; real NULLs round-trip) through
 PostgreSQL's own default CSV null spec, which Spark CAN express
 exactly: real NULL -> bare empty field (`NULL ''`), empty string ->
 quoted '' (emptyValue), any data value never collides because a bare
-empty field is unreachable for non-null data. Written in parallel, one
-file per partition — the 100 TB-safe shape (the single-file reference
-layout is a coalesce(1) away when a sink really needs it)."""
+empty field is unreachable for non-null data.
+
+Written in parallel: each task of the final stage encodes and commits
+one part file, and the \\copy manifest gets one line per part — the
+100 TB-safe shape, loadable by parallel psql sessions. The CLI's data
+phase (cli.migrate_db) writes this way, after spreading a source that
+scans as one task (a single parquet row group) to cluster width, so the
+rules and CSV encode of a large table run on every core. The
+reference's one-file-per-table layout is ``single_file=True`` (a
+coalesce(1): the whole table in one task)."""
 
 from __future__ import annotations
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -48,10 +49,11 @@ _SCHEMA_CACHE: _OrderedDict[tuple[str, str, float], object] = _OrderedDict()
 _SCHEMA_CACHE_MAX = 256
 
 
-def _path_stat(path: str) -> tuple[float, int]:
+def path_stat(path: str) -> tuple[float, int]:
     """(newest mtime, total data bytes) among ``path`` and (for a
     directory) its entries, recursing one level into subdirectories —
-    the footer files whose in-place rewrite must invalidate.
+    the footer files whose in-place rewrite must invalidate the schema
+    cache, and the bytes the fan-out gate and size-derived widths read.
     Hive-partitioned layouts put part files one level down
     (``key=value/`` subdirs); deeper nesting (multi-key partitioning)
     raises OSError so the caller skips the cache rather than ever
@@ -85,10 +87,6 @@ def _path_stat(path: str) -> tuple[float, int]:
     return mt, nbytes
 
 
-def _path_mtime(path: str) -> float:
-    return _path_stat(path)[0]
-
-
 # Scale-adaptive scan fan-out (optimization guide §2.5 "input skew: one
 # huge unsplittable file ... repartition immediately after the read"):
 # a parquet scan cannot split below one row group, so a table written
@@ -101,13 +99,27 @@ def _path_mtime(path: str) -> float:
 # table's on-disk bytes guarantee the scan is narrower than the
 # cluster: at or below _FANOUT_MAX_BYTES the scan is at most a couple
 # of splits by construction (maxPartitionBytes is 128 MB), and the
-# round-robin exchange moves at most that many bytes — orders of
-# magnitude cheaper than leaving the map side serial. Above the cap
-# the scan is naturally wide (a 100 TB table never repartitions here);
-# below _FANOUT_MIN_BYTES the table is dimension-sized and spreading
-# it buys nothing (exchange latency would tax every tiny-table query).
-# Both bounds are byte thresholds on the INPUT, not tuned core counts:
-# width always tracks sparkContext.defaultParallelism.
+# exchange moves at most that many bytes — orders of magnitude cheaper
+# than leaving the map side serial. Above the cap the scan is naturally
+# wide (a 100 TB table never repartitions here); below _FANOUT_MIN_BYTES
+# the table is dimension-sized and spreading it buys nothing (exchange
+# latency would tax every tiny-table query). Both bounds are byte
+# thresholds on the INPUT, not tuned core counts: width always tracks
+# sparkContext.defaultParallelism.
+#
+# The exchange HASHES the fixed-width columns rather than round-robin:
+# a round-robin repartition first sorts every row of each map task
+# (spark.sql.execution.sortBeforeRepartition, so a retried task
+# reproduces the same row-to-partition assignment), and on one
+# unsplittable row group that sort runs serially before any spreading.
+# A hash assignment is deterministic by itself. Hashing the numeric,
+# boolean, date and timestamp columns together spreads as evenly as a
+# row id would whenever any of them is near-unique, and skips hashing
+# long strings (measured: migrate_table -> write_reference_csv of a
+# 150k-row single-row-group table, 4 vCPU, median of 10 interleaved
+# reps: one task 1.25 s, round-robin 1.09, hash on the id 0.94, hash on
+# the fixed-width columns 0.98). A table with no fixed-width column hashes
+# every column whose type can be hashed (maps cannot).
 #
 # OPT-IN per call site, not blanket (r17 A/B, 15-query 5-rep
 # interleaved, count protocol): the explode/codec-heavy pipelines win
@@ -117,23 +129,59 @@ def _path_mtime(path: str) -> float:
 # 0.46 -> 1.03, q09 0.51 -> 1.45, s4 0.12 -> 0.23, w3 0.10 -> 0.21):
 # the fan-out only pays where per-row downstream work dwarfs the
 # shuffle of the raw bytes, which is a property of the CONSUMER, so
-# the consumer declares it.
+# the consumer declares it (load_table(fanout=True), and the CLI's
+# data phase, whose rules and CSV encode are per-row work).
 _FANOUT_MIN_BYTES = 256 * 1024
 _FANOUT_MAX_BYTES = 64 * 1024 * 1024
-_SCAN_FANOUT = True  # kill switch so probes can A/B the layout
+_FIXED_WIDTH = (T.NumericType, T.BooleanType, T.DateType, T.TimestampType, T.TimestampNTZType)
 
 
-def _scan_fanout(spark: SparkSession, df: DataFrame, nbytes: int | None) -> DataFrame:
-    if (
-        not _SCAN_FANOUT
-        or nbytes is None
-        or not (_FANOUT_MIN_BYTES <= nbytes <= _FANOUT_MAX_BYTES)
-    ):
+def _hashable(dt: T.DataType) -> bool:
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True
+
+
+def scan_fanout(spark: SparkSession, df: DataFrame, nbytes: int | None) -> DataFrame:
+    """Spread ``df`` to cluster width by a hash exchange when its input
+    is ``nbytes`` on disk within the fan-out byte gate and the cluster
+    is wider than two slots; otherwise return it unchanged."""
+    if nbytes is None or not (_FANOUT_MIN_BYTES <= nbytes <= _FANOUT_MAX_BYTES):
         return df
     width = spark.sparkContext.defaultParallelism
     if width <= 2:
         return df
-    return df.repartition(width)
+    fields = df.schema.fields
+    keys = [f.name for f in fields if isinstance(f.dataType, _FIXED_WIDTH)] or [
+        f.name for f in fields if _hashable(f.dataType)
+    ]
+    return df.repartition(width, *keys)  # no hashable column: round-robin
+
+
+def input_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of the local files ``df`` scans, from its file
+    listing (``inputFiles()``: URIs, percent-encoded; no Spark job).
+    None when it scans no file (JDBC, ``createDataFrame``) or any of
+    them is not a statable local file."""
+    from urllib.parse import unquote, urlparse
+
+    files = df.inputFiles()
+    if not files:
+        return None
+    total = 0
+    for f in files:
+        uri = urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return None
+        try:
+            total += path_stat(unquote(uri.path))[1]
+        except OSError:
+            return None
+    return total
 
 
 def load_table(
@@ -146,22 +194,20 @@ def load_table(
     ``fanout=True`` declares that the caller's per-row work (exploded
     n-grams/shingles, byte-level codecs) dwarfs the cost of moving the
     raw rows once, so a scan narrower than the cluster should be
-    round-robin spread to cluster width (see ``_scan_fanout`` — a no-op
-    whenever the table's bytes already make the scan wide).
+    spread to cluster width (see ``scan_fanout`` — a no-op whenever the
+    table's bytes already make the scan wide).
 
     `events.ts` is TIMESTAMP(NANOS) parquet, which Spark 4 only reads via
     the nanosAsLong legacy conf; we normalize it back to TimestampType
     (microsecond precision — every engine query orders/buckets with an
     explicit unique tie-break, so the ns truncation is semantics-free).
     """
-    import os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     key = None
     nbytes = None
     try:
-        mtime, nbytes = _path_stat(path)
+        mtime, nbytes = path_stat(path)
         key = (spark.sparkContext.applicationId, path, mtime)
     except OSError:
         pass  # non-local / non-statable path: no caching
@@ -178,7 +224,7 @@ def load_table(
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: ns epochs overflow double precision
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return _scan_fanout(spark, df, nbytes) if fanout else df
+    return scan_fanout(spark, df, nbytes) if fanout else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+from pathlib import Path
 
 import duckdb
 
@@ -189,16 +190,126 @@ def test_cli_csv_source_reingests_artifact_tree(spark, tmp_path):
     from mysql2psql_spark.cli import _csv_tables
 
     frames = {n: load_table(spark, SF_DIR, n) for n in ("region", "nation")}
-    changes = {"tables": {"nation": {"name": "nations"}}}
+    changes = {"tables": {"nation": {"name": "nations", "columns": {"n_name": "_SKIP_"}}}}
     migrate_db(spark, "db1", frames, str(tmp_path), schema_changes=changes)
 
     back = _csv_tables(spark, str(tmp_path / "db1"), only=[])
     # keys are the ORIGINAL table keys; files carry converted names
     assert set(back) == {"region", "nation"}
     assert back["region"].count() == frames["region"].count()
-    got = {(r[0], r[1]) for r in back["nation"].select("n_nationkey", "n_name").collect()}
-    want = {(r[0], r[1]) for r in frames["nation"].select("n_nationkey", "n_name").collect()}
+    # the skipped column is not in the CSV, so not in the re-read schema
+    assert back["nation"].columns == ["n_nationkey", "n_regionkey"]
+    cols = ("n_nationkey", "n_regionkey")
+    got = {(r[0], r[1]) for r in back["nation"].select(*cols).collect()}
+    want = {(r[0], r[1]) for r in frames["nation"].select(*cols).collect()}
     assert got == want
+
+
+def _write_one_row_group(path, n: int, seed: int, low_card_first: bool = False) -> None:
+    """A parquet file of ``n`` rows in ONE row group (unsplittable by the
+    scan), with NULLs and empty strings in its string, boolean, date and
+    timestamp columns."""
+    import datetime as dt
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    cols = {
+        "id": pa.array(range(n), pa.int64()),
+        "note": pa.array(
+            [rng.choice([None, "", "it's", "a,b", "NULL"]) if i % 7 == 0
+             else f"{rng.getrandbits(128):032x}" for i in range(n)]
+        ),
+        "flag": pa.array([None if i % 11 == 0 else i % 2 == 0 for i in range(n)]),
+        "day": pa.array([None if i % 13 == 0 else dt.date(2020, 1, 1 + i % 28)
+                         for i in range(n)]),
+        "ts": pa.array([None if i % 17 == 0 else dt.datetime(2021, 1, 1, i % 24, i % 60)
+                        for i in range(n)], pa.timestamp("us")),
+    }
+    if low_card_first:
+        cols = {"k": pa.array([i % 3 for i in range(n)], pa.int32()), **cols}
+    table = pa.table(cols)
+    pq.write_table(table, path, row_group_size=n)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+
+
+def _raw_csv_counts(paths: list[str], columns: list[str]) -> list[int]:
+    """Row count plus per-column NULL (bare empty field) and empty-string
+    (quoted '') counts, read from the CSV text by DuckDB, not Spark."""
+    aggs = ["count(*)"] + [
+        f"""count(*) FILTER (WHERE "{c}" IS NULL), count(*) FILTER (WHERE "{c}" = '')"""
+        for c in columns
+    ]
+    types = ", ".join(f"'{c}': 'VARCHAR'" for c in columns)
+    return list(
+        duckdb.connect().execute(
+            f"SELECT {', '.join(aggs)} FROM read_csv({sorted(paths)!r}, columns={{{types}}}, "
+            "delim=',', quote='''', escape='''', header=false, nullstr='', "
+            "allow_quoted_nulls=false, auto_detect=false)"
+        ).fetchone()
+    )
+
+
+def test_cli_spreads_single_row_group_tables(spark, tmp_path):
+    """migrate_db spreads a single-row-group table within the fan-out
+    byte gate that holds at least 1/width of the migration's bytes to
+    cluster width before its rules, so each task writes one part file
+    with one \\copy line. The parts together hold exactly what the
+    single-file write holds, rows spread evenly even when the first
+    column has three values, and a table below the byte floor, or with
+    a smaller share, stays one part."""
+    import re
+
+    from mysql2psql_spark import schema_ir as ir
+    from mysql2psql_spark.plans.migration import migrate_table, plan_migration
+    from mysql2psql_spark.sinks import write_reference_csv
+    from mysql2psql_spark.sources.parquet import _FANOUT_MIN_BYTES
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_one_row_group(src / "big.parquet", 40_000, seed=1)
+    _write_one_row_group(src / "skewed.parquet", 40_000, seed=2, low_card_first=True)
+    _write_one_row_group(src / "mid.parquet", 9_000, seed=3)
+    _write_one_row_group(src / "small.parquet", 500, seed=4)
+    names = ("big", "skewed", "mid", "small")
+    sizes = {n: os.path.getsize(src / f"{n}.parquet") for n in names}
+    assert sizes["big"] >= 4 * _FANOUT_MIN_BYTES and sizes["skewed"] >= 4 * _FANOUT_MIN_BYTES
+    assert sizes["mid"] >= _FANOUT_MIN_BYTES > sizes["small"]
+
+    frames = {n: load_table(spark, str(src), n) for n in sizes}
+    migrate_db(spark, "spread", frames, str(tmp_path / "out"))
+    base = tmp_path / "out" / "spread"
+    copies = re.findall(
+        r"""^\\copy "(\w+)" \((.*)\) FROM '([^']+)'""",
+        (base / "psql_data.sql").read_text(),
+        re.MULTILINE,
+    )
+    width = spark.sparkContext.defaultParallelism
+    plan = plan_migration(ir.new_schema([ir.from_dataframe(n, df) for n, df in frames.items()]))
+    for name in sizes:
+        listed = [p for t, _, p in copies if t == name]
+        on_disk = glob.glob(str(base / "tables" / f"{name}.sql" / "part-*.csv"))
+        assert sorted(listed) == sorted(on_disk)  # one \copy per part file
+        spread = (
+            width > 2
+            and sizes[name] >= _FANOUT_MIN_BYTES
+            and sizes[name] * width >= sum(sizes.values())
+        )
+        assert len(listed) == (width if spread else 1), name
+
+        columns = re.findall(r'"([^"]*)"', next(c for t, c, _ in copies if t == name))
+        single = str(tmp_path / "single" / f"{name}.sql")
+        write_reference_csv(
+            migrate_table(frames[name], plan, name, parents=frames), single, single_file=True
+        )
+        single_parts = glob.glob(f"{single}/part-*.csv")
+        assert len(single_parts) == 1
+        assert _raw_csv_counts(listed, columns) == _raw_csv_counts(single_parts, columns), name
+
+        rows = [len(Path(p).read_text().splitlines()) for p in listed]
+        assert max(rows) <= 2 * sum(rows) / len(rows), (name, rows)
 
 
 def test_cli_export_jsonl_sibling_artifacts(spark, tmp_path):

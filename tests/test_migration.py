@@ -141,6 +141,30 @@ def test_pre_sql_compiles_to_semi_join():
     assert compile_pre_sql("TRUNCATE t")["kind"] == "unsupported"
 
 
+def test_pre_sql_anti_delete_keeps_null_fk_like_mysql(spark):
+    """``DELETE ... WHERE fk NOT IN (SELECT id FROM parent)`` deletes
+    nothing where fk is NULL (``NULL NOT IN (...)`` is NULL), so the
+    compiled semi keep must retain NULL-FK rows; DuckDB runs the
+    statement itself as the oracle."""
+    import duckdb
+
+    stmt = "DELETE FROM child WHERE fk NOT IN (SELECT id FROM parent)"
+    child_rows, parent_ids = [(1, 1), (2, None), (3, 9), (4, 2), (5, None)], [1, 2]
+    child = spark.createDataFrame(child_rows, "id int, fk int")
+    parent = spark.createDataFrame([(i,) for i in parent_ids], "id int")
+    got = apply_pre_sql(child, [compile_pre_sql(stmt)], {"parent": parent})
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE child (id INT, fk INT)")
+    con.executemany("INSERT INTO child VALUES (?, ?)", child_rows)
+    con.execute("CREATE TABLE parent (id INT)")
+    con.executemany("INSERT INTO parent VALUES (?)", [(i,) for i in parent_ids])
+    con.execute(stmt)
+    want = con.execute("SELECT id, fk FROM child ORDER BY id").fetchall()
+    assert sorted((r.id, r.fk) for r in got.collect()) == want
+    assert [i for i, _ in want] == [1, 2, 4, 5]
+
+
 def test_migrate_table_data_semantics(spark, plan):
     reminders = spark.createDataFrame(
         [

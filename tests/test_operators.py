@@ -3491,12 +3491,12 @@ def test_parquet_schema_cache_sees_partitioned_rewrite(spark, tmp_path):
     df2 = psrc.load_table(spark, str(tmp_path), "parttbl")
     assert set(df2.columns) == {"a", "b", "k"}, "stale cached schema served"
 
-    # two-level nesting: _path_mtime refuses (caller skips the cache)
+    # two-level nesting: path_stat refuses (caller skips the cache)
     deep = tmp_path / "deeptbl.parquet" / "k=1" / "j=2"
     deep.mkdir(parents=True)
     pq.write_table(pa.table({"a": pa.array([1], pa.int64())}), deep / "p.parquet")
     with pytest.raises(OSError, match="nested partition dirs"):
-        psrc._path_mtime(str(tmp_path / "deeptbl.parquet"))
+        psrc.path_stat(str(tmp_path / "deeptbl.parquet"))
     # ... and load_table still answers, uncached
     assert set(psrc.load_table(spark, str(tmp_path), "deeptbl").columns) == {
         "a",

@@ -83,8 +83,15 @@ def test_cli_artifacts_load_and_roundtrip(spark, tmp_path):
 
     _psql("-f", str(base / "psql_tables.sql"))
     load = _psql("-f", str(base / "psql_data.sql"))
+    # a table spread across tasks is written as several part files, one
+    # \copy line each: every line loads, and every table is loaded
     copies = [ln for ln in load.stdout.splitlines() if ln.startswith("COPY ")]
-    assert len(copies) == len(tables), load.stdout
+    manifest = [
+        ln for ln in (base / "psql_data.sql").read_text().splitlines() if ln.startswith("\\copy ")
+    ]
+    assert len(copies) == len(manifest), load.stdout
+    assert {ln.split('"')[1] for ln in manifest} == set(tables)
+    assert all(_scalar(f'SELECT COUNT(*) > 0 FROM "{t}"') == "t" for t in tables)
 
     con = duckdb.connect()
     checks = [
